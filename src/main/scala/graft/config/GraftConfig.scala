@@ -79,7 +79,12 @@ final case class StoreSettings(
     /** Serving-store schema `{column -> sql type}` analog of `sqlite_schema`
       * (`README.md:98-108`); compiled once to a StructType. */
     schema: Seq[(String, String)] = Seq.empty
-)
+) {
+  /** Fail at config time: every append runs `counter % cleanFreq`, so a zero
+    * would otherwise throw from inside the first streaming trigger. */
+  require(cleanFreq > 0, s"clean_freq must be positive, got $cleanFreq")
+  require(cleanInterval >= 0, s"clean_interval must be non-negative, got $cleanInterval")
+}
 
 final case class GraftConfig(
     kafka: KafkaSettings = KafkaSettings(),

@@ -117,6 +117,11 @@ final class ParquetStore(
     val fenced: Boolean = false
 ) extends GenerationStore {
 
+  // Checked before the store touches the filesystem: `counter % cleanFreq`
+  // runs on every append.
+  require(cleanFreq > 0, s"cleanFreq must be positive, got $cleanFreq")
+  require(cleanInterval >= 0, s"cleanInterval must be non-negative, got $cleanInterval")
+
   val fullSchema: StructType =
     StructType(schema.fields :+ StructField("rst_id", LongType, nullable = false))
 

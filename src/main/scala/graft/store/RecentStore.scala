@@ -27,6 +27,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `localCheckpoint` (lineage truncation every `materializeEvery` appends),
   * never `collect()`ed to the driver; in a production deployment the same
   * contract maps onto a Delta/parquet table with `DELETE WHERE rst_id < …`.
+  * Both the plan and the physical layout stay bounded over a stream's life:
+  * each truncation first coalesces to the session's task slots
+  * (`defaultParallelism`), so a read scans at most that many partitions plus
+  * those of the appends since the last truncation — not one per append ever
+  * made (retention's filter empties old partitions but does not drop them).
   */
 final class RecentStore(
     val spark: SparkSession,
@@ -46,6 +51,11 @@ final class RecentStore(
       * job per append — leave None on hot paths. */
     val softLimit: Option[Long] = None
 ) extends GenerationStore {
+
+  // `counter % cleanFreq` runs on every append: a zero here would throw
+  // inside the first streaming trigger, far from the setting.
+  require(cleanFreq > 0, s"cleanFreq must be positive, got $cleanFreq")
+  require(cleanInterval >= 0, s"cleanInterval must be non-negative, got $cleanInterval")
 
   val fullSchema: StructType =
     StructType(schema.fields :+ StructField("rst_id", LongType, nullable = false))
@@ -116,8 +126,11 @@ final class RecentStore(
     counter += 1
     appends += 1
     if (counter % cleanFreq == 0) clean()
+    // Narrow coalesce (no shuffle, never raises the count) first: the union
+    // keeps the partitions retention emptied (class doc, "Scale design").
     if (materializeEvery > 0 && appends % materializeEvery == 0)
-      data = data.localCheckpoint(eager = true)
+      data = data.coalesce(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager = true)
     registerView()
   }
 

@@ -201,8 +201,11 @@ object StreamShell {
       // per-batch unions accumulate a thousands-child plan over a long
       // stream (planning + view re-registration degrade linearly; retention
       // trims data, not plan nodes). Truncate on the retention cadence,
-      // clamped so a huge cleanFreq can't re-open the leak.
-      materializeEvery = cfg.store.cleanFreq.min(64).max(1))
+      // clamped so a huge cleanFreq can't re-open the leak (StoreSettings
+      // rejects cleanFreq <= 0). Each truncation also coalesces to the
+      // session's task slots, so the partitions a read scans stay bounded
+      // too, not one per batch ever appended.
+      materializeEvery = cfg.store.cleanFreq.min(64))
     val decoder = cfg.kafka.avroValueSchema.map { avsc => (df: DataFrame) =>
       graft.sources.AvroCodec.decodeValues(df, "value", avsc)
     }

@@ -55,6 +55,16 @@ class GraftConfigSpec extends AnyFunSuite {
     MsgSettings(bucketInterval = 20) // divides 86400 — fine
   }
 
+  test("retention settings that would crash the stream fail at config time") {
+    // Every append runs `counter % cleanFreq`: a zero must fail here, not as
+    // an ArithmeticException inside the first streaming trigger.
+    intercept[IllegalArgumentException](GraftConfig.fromIni(
+      "[HTTPEndpointSetting]\nclean_freq = 0\n"))
+    intercept[IllegalArgumentException](StoreSettings(cleanFreq = -1))
+    intercept[IllegalArgumentException](StoreSettings(cleanInterval = -1))
+    StoreSettings(cleanInterval = 0, cleanFreq = 1) // keep-nothing is legal
+  }
+
   test("msg map → from_json schema includes bucket field once, all strings") {
     val st = GraftConfig.msgMapToJsonSchema(
       Seq("a" -> "x", "b" -> "timestamp"), "timestamp")

@@ -115,6 +115,33 @@ class StoreSpec extends SparkSpec {
     assert(got === Set((1L, 1L), (2L, 2L), (3L, 3L)))
     // Lineage is a checkpoint scan, not a 3-deep union of source plans.
     assert(s.selectAll.queryExecution.optimizedPlan.collectLeaves().size === 1)
+
+    // Retention-heavy: the layout is bounded too. Retention empties old
+    // generations' partitions; truncation must also drop them, or every
+    // read runs one task per append ever made.
+    val r = new RecentStore(spark, schema, "t_mat_ret", cleanInterval = 5L,
+      cleanFreq = 5L, materializeEvery = 5)
+    (1L to 40L).foreach(i => r.append(row(i, s"g$i")))
+    val parts = r.selectAll.rdd.getNumPartitions
+    assert(parts <= spark.sparkContext.defaultParallelism + r.materializeEvery,
+      s"store reads $parts partitions after 40 appends")
+    // The last retention ran after append 39 (counter 40): keeps rst_id >= 35.
+    val kept = r.selectAll.select("num", "rst_id").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).toSet
+    assert(kept === (35L to 40L).map(i => (i, i)).toSet)
+  }
+
+  test("retention settings that would crash an append fail at construction") {
+    intercept[IllegalArgumentException](
+      new RecentStore(spark, schema, "t_bad_freq", cleanFreq = 0L))
+    intercept[IllegalArgumentException](
+      new RecentStore(spark, schema, "t_bad_iv", cleanInterval = -1L))
+    val path = java.nio.file.Files.createTempDirectory("graft_bad_ret")
+      .resolve("store").toString
+    intercept[IllegalArgumentException](
+      new ParquetStore(spark, schema, path, "t_bad_pq", cleanFreq = 0L))
+    // Rejected before the store touched the filesystem.
+    assert(!new java.io.File(path).exists())
   }
 
   test("missing store column fails fast") {

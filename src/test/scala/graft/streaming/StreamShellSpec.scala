@@ -196,6 +196,11 @@ class StreamShellSpec extends SparkSpec {
     val leaves = store.selectAll.queryExecution.logical.collectLeaves().size
     assert(leaves <= cfg.store.cleanFreq + 1,
       s"store plan has $leaves leaves after $batches batches — lineage is growing")
+    // So does the physical layout: truncation coalesces to the task slots,
+    // so a read does not run one scan task per batch ever appended.
+    val parts = store.selectAll.rdd.getNumPartitions
+    assert(parts <= spark.sparkContext.defaultParallelism + cfg.store.cleanFreq,
+      s"store reads $parts partitions after $batches batches — layout is growing")
     // And contents are exactly the per-batch generations, none lost.
     assert(store.maxRstId === Some(batches.toLong))
     assert(store.selectAll.agg(org.apache.spark.sql.functions.sum("count"))
